@@ -33,6 +33,14 @@ def parse_counters(col: Column | str) -> Column:
     matching what the reference keys its lookups on (e.g.
     ``counters['FileSystemCounters']['HDFS_BYTES_WRITTEN']``,
     ``bin/job_history:348``).
+
+    Precondition: apply it above a stage boundary from the record split (a
+    shuffle or a materialized frame), never in the same stage as
+    ``job_history.parse_records`` over ``read_raw_records``. In one stage
+    with the whole-file split, the parse of a single ~1 MB log exhausted a
+    1 GiB heap and killed the JVM. ``load_history`` meets this by
+    construction: counters are parsed only in the view projections, above
+    the materialized merge.
     """
     col = F.col(col) if isinstance(col, str) else col
     group_bodies = F.regexp_extract_all(col, F.lit(GROUP_RE), 0)

@@ -21,12 +21,17 @@ differs by at most one bucket and is not golden-tested).
 Scale design — two physical strategies for one logical operator:
 
 * ``impl="sweep"`` (default): each interval becomes two delta rows
-  (+1 at t0, -1 at t1+1); deltas are summed per bucket and turned into
-  running concurrency with a cumulative-sum window partitioned by job.
-  Cost: O(attempts) + O(range) rows per job — *independent of task
-  duration*, so a 10-hour task costs the same as a 10-second one. Jobs are
-  the unit of parallelism (the 100 TB case is millions of logs); one job's
-  spine lives in one window partition, bounded by the guard below.
+  (+1 at t0, -1 at t1+1, the latter dropped past the job's range); a
+  zero-delta row for every t in 0..range (the spine) joins them by union,
+  one ``groupBy(job, t)`` sums them per bucket and a cumulative-sum window
+  partitioned by job turns the sums into running concurrency. Attempts are
+  shuffled once, by job: the final-attempt flag (a window per task), the
+  spine, the sums and the running sum all reuse that partitioning, and
+  only the final sort shuffles again. Cost: O(attempts) + O(range) rows per
+  job — *independent of task duration*, so a 10-hour task costs the same
+  as a 10-second one. Jobs are the unit of parallelism (the 100 TB case is
+  millions of logs); one job's spine lives in one window partition,
+  bounded by the guard below.
 * ``impl="explode"``: the literal ``explode(sequence(t0, t1))`` histogram —
   O(sum of interval lengths) rows. Kept as an independently-derived
   cross-check (property tests assert both agree) and for tiny inputs.
@@ -42,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from hadoop_jobanalyzer_spark.sources.job_history import HistoryViews, final_attempts
+from hadoop_jobanalyzer_spark.sources.job_history import HistoryViews
 
 _KEY = ["source_file", "jobid"]
 SERIES = ["maps", "shuffle", "merge", "reduce", "waste"]
@@ -65,18 +70,21 @@ def timeline_intervals(views: HistoryViews, scale: int = 1000) -> DataFrame:
         _scaled(F.col("finish_time"), scale).alias("_finish"),
     )
 
-    finals = final_attempts(views.attempts).select(
-        *_KEY, "attempt_id", F.lit(True).alias("_is_final")
+    # final_attempts' rule as a flag: a task's final attempt is its SUCCESS
+    # attempt with a finish time whose FINISH_TIME record comes last. The
+    # window sees every attempt of the task, timed or not (an untimed final
+    # attempt still makes its siblings waste). jobid is derived from taskid,
+    # so adding it to the window key keeps one partition per task and lets
+    # the sweep's per-job shuffle serve this window too.
+    ok = (F.col("task_status") == "SUCCESS") & F.col("finish_time").isNotNull()
+    last_ok = F.max(F.when(ok, F.col("finish_seq"))).over(
+        Window.partitionBy(*_KEY, "taskid")
     )
-
     att = (
-        views.attempts.filter(
-            ~F.col("task_type").isin("SETUP", "CLEANUP")
-            & F.col("start_time").isNotNull()
-            & F.col("finish_time").isNotNull()
-        )
-        .join(finals, [*_KEY, "attempt_id"], "left")
-        .withColumn("_is_final", F.coalesce(F.col("_is_final"), F.lit(False)))
+        views.attempts.filter(~F.col("task_type").isin("SETUP", "CLEANUP"))
+        .repartition(*_KEY)
+        .withColumn("_is_final", F.coalesce(ok & (F.col("finish_seq") == last_ok), F.lit(False)))
+        .filter(F.col("start_time").isNotNull() & F.col("finish_time").isNotNull())
         .join(F.broadcast(bounds), _KEY)
     )
 
@@ -170,24 +178,22 @@ def timeline(
         counts = _explode_counts(intervals)
     else:
         raise ValueError(f"unknown timeline impl: {impl!r}")
-
-    spine = _dense_spine(intervals)
-    filled = [F.coalesce(F.col(s), F.lit(0)).cast("long").alias(s) for s in SERIES]
-    return (
-        spine.join(counts, [*_KEY, "t"], "left")
-        .select(*_KEY, "t", *filled)
-        .orderBy(*_KEY, "t")
-    )
+    return counts.orderBy(*_KEY, "t")
 
 
 def _sweep_counts(intervals: DataFrame) -> DataFrame:
     """Interval overlap counting via boundary deltas + running sum.
 
-    O(attempts) delta rows; the cumulative window is partitioned by job (each
-    job's spine is guard-bounded), so scale-out is across jobs.
+    Each interval gives a +1 delta at t0 and a -1 at t1+1 (dropped past the
+    job's range); the spine adds a zero delta at every t in 0..range, so
+    one ``groupBy(job, t)`` yields the dense per-bucket sums and the
+    cumulative window turns them into concurrency. The intervals arrive
+    partitioned by job (``timeline_intervals``), so the aggregation, the
+    spine and the window share that one shuffle.
     """
     deltas = intervals.select(
         *_KEY,
+        "range",
         "series",
         F.explode(
             F.array(
@@ -195,25 +201,30 @@ def _sweep_counts(intervals: DataFrame) -> DataFrame:
                 F.struct((F.col("t1") + 1).alias("t"), F.lit(-1).alias("d")),
             )
         ).alias("_e"),
-    ).select(*_KEY, "series", F.col("_e.t").alias("t"), F.col("_e.d").alias("d"))
+    ).select(*_KEY, "range", "series", F.col("_e.t").alias("t"), F.col("_e.d").alias("d"))
 
-    by_bucket = deltas.groupBy(*_KEY, "t").agg(*_series_sums(F.col("d")))
-
-    w = Window.partitionBy(*_KEY).orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    spine = _dense_spine(intervals)
-    joined = spine.join(by_bucket, [*_KEY, "t"], "left")
-    return joined.select(
-        *_KEY,
-        "t",
-        *[F.sum(F.coalesce(F.col(s), F.lit(0))).over(w).alias(s) for s in SERIES],
+    spine = _dense_spine(intervals).select(
+        *_KEY, "t", F.lit(None).cast("string").alias("series"), F.lit(0).alias("d")
     )
+    by_bucket = (
+        deltas.filter(F.col("t") <= F.col("range"))
+        .select(*_KEY, "t", "series", "d")
+        .unionByName(spine)
+        .groupBy(*_KEY, "t")
+        .agg(*_series_sums(F.col("d")))
+    )
+    w = Window.partitionBy(*_KEY).orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
+    return by_bucket.select(*_KEY, "t", *[F.sum(s).over(w).alias(s) for s in SERIES])
 
 
 def _explode_counts(intervals: DataFrame) -> DataFrame:
     """Literal per-bucket expansion — the reference's nested loops
-    (bin/job_history:486-527) as explode(sequence)+groupBy. Cross-check impl;
-    cost grows with total interval length."""
+    (bin/job_history:486-527) as explode(sequence)+groupBy, zero-filled
+    over the spine. Cross-check impl; cost grows with total interval
+    length."""
     buckets = intervals.select(
         *_KEY, "series", F.explode(F.sequence(F.col("t0"), F.col("t1"))).alias("t")
     )
-    return buckets.groupBy(*_KEY, "t").agg(*_series_sums(F.lit(1)))
+    counts = buckets.groupBy(*_KEY, "t").agg(*_series_sums(F.lit(1)))
+    filled = [F.coalesce(F.col(s), F.lit(0)).cast("long").alias(s) for s in SERIES]
+    return _dense_spine(intervals).join(counts, [*_KEY, "t"], "left").select(*_KEY, "t", *filled)

@@ -46,12 +46,9 @@ ENGINE_CONF: dict[str, str] = {
 # SPARK_GRAFT_INIT_PARTITIONS; the init-partition ceiling is NOT
 # defaulted high because a blanket 512 measured +21% on the sf0.1 bench
 # subset (localCheckpoint pins the pre-coalesce partition count through
-# iterative loops — q197 3x worse).
-_INIT_PARTITIONS = os.environ.get("SPARK_GRAFT_INIT_PARTITIONS")
-if _INIT_PARTITIONS:
-    ENGINE_CONF[
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    ] = _INIT_PARTITIONS
+# iterative loops — q197 3x worse). Both are read when the session is
+# built, not when this module is imported.
+INIT_PARTITIONS_CONF = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
 
 def get_spark(
@@ -73,6 +70,9 @@ def get_spark(
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(ENGINE_CONF)
+    init_partitions = os.environ.get("SPARK_GRAFT_INIT_PARTITIONS")
+    if init_partitions:
+        conf[INIT_PARTITIONS_CONF] = init_partitions
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)

@@ -14,6 +14,17 @@ for last-write-wins merge order), and parallelism comes from *many files*
 (the 100 TB case is millions of job logs, partitioned by file), not from
 splitting one small file. Everything downstream is pure Catalyst
 expressions — no Python UDFs (SURVEY.md §2.8).
+
+The jobs, tasks and attempts views come from ONE last-write-wins merge
+(``merge_records``: one aggregation keyed by file, record kind and id, one
+shuffle). ``load_history`` materializes that merge once per call with
+``util.materialize``, so every report over the views reads the merged
+rows instead of re-reading and re-parsing the logs; the blocks are owned
+by the ContextCleaner and released when the views are garbage-collected
+(nothing enters the CacheManager). The merge keeps raw attribute strings:
+casts and the COUNTERS parse happen in each view's projection, because a
+materialized frame cannot be column-pruned and most reports never read
+counters.
 """
 
 from __future__ import annotations
@@ -25,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hadoop_jobanalyzer_spark.functions.counters import parse_counters
+from hadoop_jobanalyzer_spark.util import materialize
 
 # Reference record terminator (bin/job_history:214-218): a record ends with
 # " ." at end-of-physical-line.
@@ -134,36 +146,9 @@ def _last_non_null(attr: Column, seq: Column) -> Column:
 
 _A = "attrs"
 
-
-def _merged_attrs(
-    parsed: DataFrame,
-    group_cols: list[str],
-    fields: list[tuple[str, str, str | None]],
-    extra_aggs: list[Column] | None = None,
-) -> DataFrame:
-    """Group records and merge each listed attribute last-non-null-wins.
-
-    ``fields``: (ATTR_KEY, out_name, cast_type|None). Special cast types:
-    'counters' -> parsed counters struct array, 'splits' -> array<string>.
-    ``extra_aggs`` join the same single aggregation — one shuffle for
-    everything a view needs (no second groupBy + join).
-    """
-    aggs = []
-    for key, name, typ in fields:
-        col = _last_non_null(F.col(_A)[key], F.col("seq"))
-        if typ == "counters":
-            col = parse_counters(col)
-        elif typ == "splits":
-            col = F.when(col == "", F.array().cast("array<string>")).otherwise(F.split(col, ","))
-        elif typ is not None:
-            col = col.cast(typ)
-        aggs.append(col.alias(name))
-    aggs.append(F.min("seq").alias("first_seq"))
-    aggs.append(F.max("seq").alias("last_seq"))
-    aggs.extend(extra_aggs or [])
-    return parsed.groupBy(*group_cols).agg(*aggs)
-
-
+# Each view's attributes: (ATTR_KEY, out_name, cast_type|None). Special cast
+# types: 'counters' -> parsed counters struct array, 'splits' ->
+# array<string>.
 JOB_FIELDS: list[tuple[str, str, str | None]] = [
     ("JOBNAME", "jobname", None),
     ("USER", "user", None),
@@ -182,14 +167,6 @@ JOB_FIELDS: list[tuple[str, str, str | None]] = [
     ("COUNTERS", "counters", "counters"),
 ]
 
-
-def jobs_view(parsed: DataFrame) -> DataFrame:
-    """One row per job: last-write-wins merge of all ``Job`` records
-    (SURVEY.md A1; bin/job_history:232-235)."""
-    jobs = parsed.filter(F.col("event") == "Job").withColumn("jobid", F.col(_A)["JOBID"])
-    return _merged_attrs(jobs, ["source_file", "jobid"], JOB_FIELDS)
-
-
 TASK_FIELDS: list[tuple[str, str, str | None]] = [
     ("TASK_TYPE", "task_type", None),
     ("START_TIME", "start_time", "long"),
@@ -199,18 +176,6 @@ TASK_FIELDS: list[tuple[str, str, str | None]] = [
     ("COUNTERS", "counters", "counters"),
     ("ERROR", "error", None),
 ]
-
-
-def tasks_view(parsed: DataFrame) -> DataFrame:
-    """One row per task, merged from ``Task`` events (bin/job_history:315-333).
-
-    All task types are kept (MAP/REDUCE/SETUP/CLEANUP); report operators
-    filter, mirroring the reference's per-type folds.
-    """
-    tasks = parsed.filter(F.col("event") == "Task").withColumn("taskid", F.col(_A)["TASKID"])
-    out = _merged_attrs(tasks, ["source_file", "taskid"], TASK_FIELDS)
-    return out.withColumn("jobid", _jobid_of_taskid(F.col("taskid")))
-
 
 ATTEMPT_FIELDS: list[tuple[str, str, str | None]] = [
     ("TASKID", "taskid", None),
@@ -228,6 +193,109 @@ ATTEMPT_FIELDS: list[tuple[str, str, str | None]] = [
     ("ERROR", "error", None),
 ]
 
+# every attribute some view reads, each merged once
+_MERGED_KEYS = list(dict.fromkeys(k for k, _, _ in JOB_FIELDS + TASK_FIELDS + ATTEMPT_FIELDS))
+
+
+def merge_records(parsed: DataFrame) -> DataFrame:
+    """The one last-write-wins merge behind all three views.
+
+    One row per (source_file, record_kind, id): record_kind is ``job``
+    (``Job`` records, id JOBID), ``task`` (``Task``, TASKID) or ``attempt``
+    (``MapAttempt``/``ReduceAttempt``, TASK_ATTEMPT_ID); other events
+    (``Meta``) belong to no view. Every attribute in ``_MERGED_KEYS`` is
+    merged last-non-null-wins and kept as the raw string under its
+    attribute key — casts and the COUNTERS parse belong to the per-view
+    projections, so a report that never reads counters never parses them.
+    ``kind`` (the last record's event) and ``finish_seq`` (in-file order
+    of the last record carrying FINISH_TIME) are per-record values the
+    attempts view needs; they ride the same single aggregation.
+    """
+    ev, a = F.col("event"), F.col(_A)
+    is_attempt = ev.isin("MapAttempt", "ReduceAttempt")
+    keyed = parsed.select(
+        "source_file",
+        "seq",
+        "event",
+        _A,
+        F.when(ev == "Job", "job")
+        .when(ev == "Task", "task")
+        .when(is_attempt, "attempt")
+        .alias("record_kind"),
+        F.when(ev == "Job", a["JOBID"])
+        .when(ev == "Task", a["TASKID"])
+        .when(is_attempt, a["TASK_ATTEMPT_ID"])
+        .alias("id"),
+    ).filter(F.col("record_kind").isNotNull())
+    return keyed.groupBy("source_file", "record_kind", "id").agg(
+        *[_last_non_null(a[k], F.col("seq")).alias(k) for k in _MERGED_KEYS],
+        F.min("seq").alias("first_seq"),
+        F.max("seq").alias("last_seq"),
+        F.max_by("event", "seq").alias("kind"),
+        F.max(F.when(a["FINISH_TIME"].isNotNull(), F.col("seq"))).alias("finish_seq"),
+    )
+
+
+def _project(
+    merged: DataFrame,
+    record_kind: str,
+    id_name: str,
+    fields: list[tuple[str, str, str | None]],
+    extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """One view of ``merge_records``' output: its record kind, its id
+    renamed, its fields typed, then the ``extra`` merged columns."""
+    cols = []
+    for key, name, typ in fields:
+        col = F.col(key)
+        if typ == "counters":
+            col = parse_counters(col)
+        elif typ == "splits":
+            col = F.when(col == "", F.array().cast("array<string>")).otherwise(F.split(col, ","))
+        elif typ is not None:
+            col = col.cast(typ)
+        cols.append(col.alias(name))
+    return merged.filter(F.col("record_kind") == record_kind).select(
+        "source_file", F.col("id").alias(id_name), *cols, "first_seq", "last_seq", *extra
+    )
+
+
+def _jobs_of(merged: DataFrame) -> DataFrame:
+    return _project(merged, "job", "jobid", JOB_FIELDS)
+
+
+def _tasks_of(merged: DataFrame) -> DataFrame:
+    out = _project(merged, "task", "taskid", TASK_FIELDS)
+    return out.withColumn("jobid", _jobid_of_taskid(F.col("taskid")))
+
+
+def _attempts_of(merged: DataFrame) -> DataFrame:
+    out = _project(merged, "attempt", "attempt_id", ATTEMPT_FIELDS, ("kind", "finish_seq"))
+    return (
+        out.withColumn("jobid", _jobid_of_taskid(F.col("taskid")))
+        .withColumn(
+            "start_time",
+            F.when(F.col("start_time") == 0, F.lit(None).cast("long")).otherwise(
+                F.col("start_time")
+            ),
+        )
+    )
+
+
+def jobs_view(parsed: DataFrame) -> DataFrame:
+    """One row per job: last-write-wins merge of all ``Job`` records
+    (SURVEY.md A1; bin/job_history:232-235)."""
+    return _jobs_of(merge_records(parsed))
+
+
+def tasks_view(parsed: DataFrame) -> DataFrame:
+    """One row per task, merged from ``Task`` events (bin/job_history:315-333).
+
+    All task types are kept (MAP/REDUCE/SETUP/CLEANUP); report operators
+    filter, mirroring the reference's per-type folds.
+    """
+    return _tasks_of(merge_records(parsed))
+
 
 def attempts_view(parsed: DataFrame) -> DataFrame:
     """One row per task attempt, merged from ``MapAttempt``/``ReduceAttempt``
@@ -239,32 +307,7 @@ def attempts_view(parsed: DataFrame) -> DataFrame:
     first_seq/last_seq. START_TIME==0 is normalized to null (reference F5
     zero-start filter, bin/job_history:264).
     """
-    att = parsed.filter(F.col("event").isin("MapAttempt", "ReduceAttempt")).withColumn(
-        "attempt_id", F.col(_A)["TASK_ATTEMPT_ID"]
-    )
-    # kind and finish_seq need per-record (not last-non-null) semantics but
-    # ride the same single aggregation — one shuffle, no join-back.
-    merged = _merged_attrs(
-        att,
-        ["source_file", "attempt_id"],
-        ATTEMPT_FIELDS,
-        extra_aggs=[
-            F.max_by("event", "seq").alias("kind"),
-            F.max(
-                F.when(F.col(_A)["FINISH_TIME"].isNotNull(), F.col("seq"))
-            ).alias("finish_seq"),
-        ],
-    )
-    out = (
-        merged.withColumn("jobid", _jobid_of_taskid(F.col("taskid")))
-        .withColumn(
-            "start_time",
-            F.when(F.col("start_time") == 0, F.lit(None).cast("long")).otherwise(
-                F.col("start_time")
-            ),
-        )
-    )
-    return out
+    return _attempts_of(merge_records(parsed))
 
 
 def final_attempts(attempts: DataFrame) -> DataFrame:
@@ -293,7 +336,12 @@ def final_attempts(attempts: DataFrame) -> DataFrame:
 class HistoryViews:
     """The typed views one ingest produces (SURVEY.md §1.3). ``records`` is
     None when the views were reopened from a persisted lake (reports only
-    consume the typed views)."""
+    consume the typed views).
+
+    From ``load_history``, ``jobs``, ``tasks`` and ``attempts`` are
+    projections of one merged frame, computed once per load and released
+    when the views are garbage-collected; reports built on them share it.
+    """
 
     records: DataFrame | None
     jobs: DataFrame
@@ -338,11 +386,20 @@ def filter_success(views: HistoryViews) -> HistoryViews:
 
 
 def load_history(spark: SparkSession, path: str, unescape: bool = False) -> HistoryViews:
-    """One-call ingest: path (file, glob, or directory of job logs) -> views."""
+    """One-call ingest: path (file, glob, or directory of job logs) -> views.
+
+    The three views are projections of one ``merge_records`` frame,
+    materialized once (``util.materialize``): however many reports run
+    over the views, the logs are read, parsed and merged once. Adaptive
+    execution plans the checkpointed frame when it is built, so this call
+    already runs the merge's shuffle; the first report's first action
+    finishes the aggregation and stores the merged rows.
+    """
     parsed = parse_records(read_raw_records(spark, path), unescape=unescape)
+    merged = materialize(merge_records(parsed))
     return HistoryViews(
         records=parsed,
-        jobs=jobs_view(parsed),
-        tasks=tasks_view(parsed),
-        attempts=attempts_view(parsed),
+        jobs=_jobs_of(merged),
+        tasks=_tasks_of(merged),
+        attempts=_attempts_of(merged),
     )

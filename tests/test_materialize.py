@@ -192,3 +192,49 @@ def test_release_copurchase_edges_unpersists(spark):
     assert release_copurchase_edges(spark) == 1
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert _copurchase_edges(spark, SF_DIR).count() == n
+
+
+def _stored_rdd_ids(spark) -> set[int]:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {infos[i].id() for i in range(len(infos))}
+
+
+def test_repeated_history_loads_leave_no_cache(spark):
+    """load_history materializes its merged records on every call; chart
+    requests and report cycles over fresh loads must leave the CacheManager
+    empty (the merge is ContextCleaner-owned, not cached), and once the
+    views are garbage-collected the ContextCleaner must drop their blocks
+    from storage."""
+    import gc
+    import os
+    import time
+
+    from hadoop_jobanalyzer_spark.operators import job_summary, map_table, timeline
+    from hadoop_jobanalyzer_spark.sources import load_history
+    from hadoop_jobanalyzer_spark.webapp import render_chart_png
+
+    tiny = os.path.join(os.path.dirname(__file__), "data", "tiny_log.txt")
+    with open(tiny) as f:
+        log = f.read()
+    spark.catalog.clearCache()
+    stored_before = _stored_rdd_ids(spark)
+    for chart in ("timeline", "map", "timeline", "map"):
+        assert render_chart_png(spark, log=log, chart=chart).startswith(b"\x89PNG")
+    for _ in range(3):
+        v = load_history(spark, tiny)
+        assert job_summary(v).count() == 1
+        assert map_table(v).count() == 2
+        assert timeline(v).count() == 11001
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _stored_rdd_ids(spark) - stored_before, "the loads stored no blocks"
+
+    del v
+    deadline = time.monotonic() + 60
+    while True:
+        gc.collect()
+        spark._jvm.System.gc()
+        leftover = _stored_rdd_ids(spark) - stored_before
+        if not leftover or time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert not leftover, f"blocks of RDDs {sorted(leftover)} outlived their views"

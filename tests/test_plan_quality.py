@@ -4,20 +4,26 @@ parquet scans — plus ingest robustness probes."""
 
 import contextlib
 import io
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from hadoop_jobanalyzer_spark import util
 from hadoop_jobanalyzer_spark.operators import job_summary, map_table, timeline
 from hadoop_jobanalyzer_spark.plans.registry import QUERIES
 from hadoop_jobanalyzer_spark.sources.job_history import (
     HistoryViews,
     attempts_view,
     jobs_view,
+    load_history,
     parse_records,
     records_from_string,
     tasks_view,
 )
+
+TINY = os.path.join(os.path.dirname(__file__), "data", "tiny_log.txt")
 
 # Queries where an O(n) x tiny-broadcast nested loop is the *intended*
 # plan (single query-vector or n_cells-centroid crossJoin — the broadcast
@@ -145,9 +151,45 @@ def _views_from(spark, text):
 
 
 def _n_exchanges(plan: str) -> int:
-    import re
-
     return len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
+
+
+def _n_broadcasts(plan: str) -> int:
+    return len(re.findall(r"^\(\d+\) BroadcastExchange", plan, re.M))
+
+
+def test_history_views_share_one_merge(spark):
+    """load_history merges every record kind in one aggregation (one
+    shuffle), materializes it, and the three views only project it: each
+    view's plan is a single scan of the same materialized RDD."""
+    util.PLAN_CAPTURE = []
+    try:
+        v = load_history(spark, TINY)
+        captured = util.PLAN_CAPTURE
+    finally:
+        util.PLAN_CAPTURE = None
+    assert len(captured) == 1
+    assert _n_exchanges(captured[0]) == 1
+    rdd_ids = set()
+    for view in (v.jobs, v.tasks, v.attempts):
+        leaves = view._jdf.queryExecution().optimizedPlan().collectLeaves()
+        assert leaves.size() == 1
+        assert leaves.head().getClass().getSimpleName() == "LogicalRDD"
+        rdd_ids.add(leaves.head().rdd().id())
+        assert _n_exchanges(_plan(view)) == 0
+    assert len(rdd_ids) == 1
+
+
+def test_timeline_exchange_budget(spark):
+    """The sweep shuffles attempts once by job (the final-flag window, the
+    per-bucket sums, the spine and the running sum all reuse it) plus the
+    final sort; each of the two branches over the intervals (deltas and
+    spine) repeats the job-key shuffle and the job-bounds broadcast, which
+    adaptive execution reuses. A per-view merge, a final_attempts join or
+    a spine join back would each add exchanges here."""
+    plan = _plan(timeline(load_history(spark, TINY)))
+    assert _n_exchanges(plan) == 3
+    assert _n_broadcasts(plan) == 2
 
 
 @pytest.mark.parametrize(

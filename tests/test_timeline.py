@@ -11,9 +11,16 @@ from hadoop_jobanalyzer_spark.operators.timeline import (
     timeline,
     timeline_intervals,
 )
-from hadoop_jobanalyzer_spark.sources import load_history
+from hadoop_jobanalyzer_spark.sources import final_attempts, load_history
 
-TINY = os.path.join(os.path.dirname(__file__), "data", "tiny_log.txt")
+DATA = os.path.join(os.path.dirname(__file__), "data")
+TINY = os.path.join(DATA, "tiny_log.txt")
+# one map task with two SUCCESS attempts (the later record wins), a FAILED,
+# a KILLED, a SUCCESS record without FINISH_TIME and a START_TIME="0"
+# attempt; a map task whose final attempt has START_TIME="0"; and a reduce
+# task with a speculative SUCCESS and a KILLED attempt
+FINAL_FLAG = os.path.join(DATA, "final_flag_log.txt")
+IN_REPO_LOGS = [TINY, os.path.join(DATA, "failed_log.txt"), FINAL_FLAG]
 
 
 def series_sums(df):
@@ -57,6 +64,54 @@ def test_timeline_tiny(spark, impl):
     assert sums["sum(merge)"] == 1001
     assert sums["sum(reduce)"] == 1001
     tl.unpersist()
+
+
+def _final_flag_split(v):
+    """(attempts labelled maps/shuffle/merge/reduce, attempts labelled
+    waste, final attempts, timed non-SETUP/CLEANUP attempts)."""
+    ivs = timeline_intervals(v).select("attempt_id", "series").collect()
+    timed = v.attempts.filter(
+        ~F.col("task_type").isin("SETUP", "CLEANUP")
+        & F.col("start_time").isNotNull()
+        & F.col("finish_time").isNotNull()
+    )
+    return (
+        {r["attempt_id"] for r in ivs if r["series"] != "waste"},
+        {r["attempt_id"] for r in ivs if r["series"] == "waste"},
+        {r["attempt_id"] for r in final_attempts(v.attempts).collect()},
+        {r["attempt_id"] for r in timed.collect()},
+    )
+
+
+@pytest.mark.parametrize("path", [TINY, FINAL_FLAG], ids=os.path.basename)
+def test_final_flag_matches_final_attempts(spark, path):
+    """The timeline's in-window final flag picks exactly final_attempts'
+    rows; every other timed attempt is waste."""
+    final_series, waste, finals, timed = _final_flag_split(load_history(spark, path))
+    assert final_series == finals & timed
+    assert waste == timed - finals
+
+
+def test_final_flag_edge_cases(spark):
+    final_series, waste, finals, _ = _final_flag_split(load_history(spark, FINAL_FLAG))
+    a = "attempt_202001010000_0003_"
+    # m_000000: _1's SUCCESS record comes after _0's although it finished
+    # earlier; _4 has no FINISH_TIME. m_000001: the final _1 starts at 0,
+    # so it draws nothing and its sibling _0 is waste.
+    assert finals == {a + "m_000000_1", a + "m_000001_1", a + "r_000000_1"}
+    assert final_series == {a + "m_000000_1", a + "r_000000_1"}
+    assert waste == {
+        a + "m_000000_0", a + "m_000000_2", a + "m_000000_3",
+        a + "m_000001_0", a + "r_000000_0", a + "r_000000_2",
+    }
+
+
+@pytest.mark.parametrize("path", IN_REPO_LOGS, ids=os.path.basename)
+@pytest.mark.parametrize("scale", [1000, 100])
+def test_sweep_matches_explode_in_repo_logs(spark, path, scale):
+    v = load_history(spark, path)
+    sweep = timeline(v, scale=scale, impl="sweep").collect()
+    assert sweep == timeline(v, scale=scale, impl="explode").collect()
 
 
 def test_sweep_matches_explode_fixture(spark, fixture_log1):
